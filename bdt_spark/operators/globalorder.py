@@ -36,6 +36,11 @@ sorting/scanning the world, which is a cliff, not a constant factor.
 
 NOT fully lazy: computing offsets requires one Spark job before the
 result plan is returned (same documented behavior as `ann.ivf_probe`).
+
+Several orderings of one frame share ONE pass by stacking: tag a copy of
+each row per ordering with k, put ordering k's key in a column that is
+NULL outside block k, order by (k, those columns, tie-breaker), and read
+ordering k's row number as idx - k*n (customer_rfm_segmentation).
 """
 
 from __future__ import annotations

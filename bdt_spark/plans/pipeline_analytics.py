@@ -1188,12 +1188,21 @@ _RFM_TAIL = """
     "features_quantile_binning), folded into the 64-cell RFM cube "
     "with named segments. The three orderings run over the "
     "per-customer rollup (distinct customers, not orders) — still "
-    "billions of rows at 100 TB, so r10 replaces the three "
-    "single-partition NTILE windows with three chained "
-    "operators/globalorder.py passes (range partition + local row "
-    "numbers + broadcast offsets, NTILE derived arithmetically from "
-    "the global index); the oracle keeps the classic windowed form. "
-    "The segment fold tail is the same SQL text the oracle runs.",
+    "billions of rows at 100 TB, so instead of three single-partition "
+    "NTILE windows the Spark arm scores all three in ONE "
+    "operators/globalorder.py pass over a stacked frame: each customer "
+    "row becomes 3 rows tagged k in {0,1,2} with s_i = CASE WHEN k = i "
+    "THEN key_i END (keys last_order, frequency, monetary), ordered by "
+    "(k, s0, s1, s2, o_custkey) ascending. Equivalence: inside block k "
+    "every s_j with j != k is NULL and ties, so the block is ordered by "
+    "(key_k ASC NULLS FIRST, o_custkey) — exactly the oracle's window "
+    "order; the blocks are contiguous and hold n = rows / 3 rows each, "
+    "so idx - k*n is that ordering's exact 1-based row number, and "
+    "NTILE follows arithmetically from it. A MAX(CASE WHEN k = i THEN "
+    "tile END) pivot per o_custkey (one customer-sized shuffle) "
+    "restores the three scores per customer; no SinglePartition "
+    "exchange anywhere. The oracle keeps the classic windowed form, "
+    "and the segment fold tail is the same SQL text the oracle runs.",
 )
 def customer_rfm_segmentation(spark, sf_dir):
     from bdt_spark.operators.cacheutil import transfer_ownership
@@ -1203,25 +1212,40 @@ def customer_rfm_segmentation(spark, sf_dir):
     )
 
     load_fixture_tables(spark, sf_dir)
-    cur = spark.sql(f"SELECT * FROM ({_RFM_PER_CUST})")
-    owned = []
-    for score, key in (
+    scores = (
         ("r_score", "last_order"),
         ("f_score", "frequency"),
         ("m_score", "monetary"),
-    ):
-        go_res, _, n = with_global_order(
-            cur,
-            [F.col(key).asc(), F.col("o_custkey").asc()],
-            index_col="__rn",
+    )
+    k = F.col("__k")
+    stacked = (
+        spark.sql(f"SELECT * FROM ({_RFM_PER_CUST})")
+        .withColumn("__k", F.explode(F.array(*map(F.lit, range(3)))))
+        .select(
+            "o_custkey",
+            k,
+            *(F.when(k == i, F.col(key)).alias(f"__s{i}")
+              for i, (_, key) in enumerate(scores)),
         )
-        owned.append(go_res)
-        cur = go_res.withColumn(
-            score, ntile_from_index("__rn", n, 4)
-        ).drop("__rn")
-    cur.createOrReplaceTempView("__go_rfm_scored")
+    )
+    go_res, _, n_rows = with_global_order(
+        stacked,
+        [F.col(c).asc() for c in ("__k", "__s0", "__s1", "__s2", "o_custkey")],
+        index_col="__idx",
+    )
+    n = n_rows // 3
+    scored = (
+        go_res.withColumn("__rn", F.col("__idx") - k.cast("long") * n)
+        .withColumn("__tile", ntile_from_index("__rn", n, 4))
+        .groupBy("o_custkey")
+        .agg(
+            *(F.max(F.when(k == i, F.col("__tile"))).alias(score)
+              for i, (score, _) in enumerate(scores))
+        )
+    )
+    scored.createOrReplaceTempView("__go_rfm_scored")
     out = spark.sql(_RFM_TAIL.format(scored="__go_rfm_scored"))
-    return transfer_ownership(out, *owned)
+    return transfer_ownership(out, go_res)
 
 
 _PARETO_PART_REV = """

@@ -156,3 +156,77 @@ def test_rewritten_queries_have_no_single_partition_window(spark, sf_dir):
             f"{name}: SinglePartition over non-aggregate children: {bad}"
         )
         release(df)
+
+
+def _crafted_orders(path, n_customers: int, seed: int) -> None:
+    """orders.parquet with NULL dates, prices and custkeys and heavy key
+    ties: 3 dates, 3 prices, 1-3 orders per customer. The NULL custkey
+    is one of the `n_customers` groups."""
+    import datetime
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(seed)
+    dates = [None, *(datetime.datetime(2020, 1, d) for d in (1, 2, 3))]
+    prices = [None, 10.5, 20.25, 20.25, 99.0]
+    rows = []
+    for cust in [None, *range(1, n_customers)]:
+        if cust == 1:  # NULL last_order and NULL monetary
+            rows.append((len(rows) + 1, cust, None, None))
+            continue
+        for _ in range(rng.randint(1, 3)):
+            rows.append((len(rows) + 1, cust, rng.choice(prices),
+                         rng.choice(dates)))
+    cols = list(zip(*rows))
+    pq.write_table(
+        pa.table({
+            "o_orderkey": pa.array(cols[0], pa.int64()),
+            "o_custkey": pa.array(cols[1], pa.int64()),
+            "o_totalprice": pa.array(cols[2], pa.float64()),
+            "o_orderdate": pa.array(cols[3], pa.timestamp("us")),
+        }),
+        str(path / "orders.parquet"),
+    )
+
+
+@pytest.mark.parametrize("n_customers", [1, 3, 5, 103])
+def test_rfm_matches_windowed_oracle_on_nulls_and_ties(
+    spark, tmp_path, n_customers
+):
+    """The stacked single-pass scoring equals Spark running the spec's
+    own windowed oracle text, with NULL keys (sorted first, as the
+    window does), heavy ties, n < 4 and n mod 4 != 0."""
+    import bdt_spark.plans as plans
+    from bdt_spark.sources.io import load_fixture_tables
+
+    _crafted_orders(tmp_path, n_customers, seed=n_customers)
+    spec = plans.get_query("customer_rfm_segmentation")
+    df = spec.fn(spark, str(tmp_path))
+    got = sorted(map(tuple, df.collect()))
+    release(df)
+    load_fixture_tables(spark, str(tmp_path))
+    want = sorted(map(tuple, spark.sql(spec.oracle).collect()))
+    assert sum(r[3] for r in want) == n_customers
+    assert got == want
+
+
+def test_rfm_build_starts_at_most_six_jobs(spark, sf_dir):
+    """Building rfm runs one global-order pass for all three orderings:
+    at most 6 Spark jobs before any action (three chained passes ran
+    20). Jobs counted by the StatusTracker under the build's job group."""
+    import bdt_spark.plans as plans
+    from bdt_spark.sources.io import load_fixture_tables
+
+    load_fixture_tables(spark, sf_dir)
+    sc = spark.sparkContext
+    group = "test-rfm-build"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        df = plans.get_query("customer_rfm_segmentation").fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    release(df)
+    assert 0 < jobs <= 6, jobs

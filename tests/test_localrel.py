@@ -65,6 +65,14 @@ def test_empty_rows(spark):
     assert df.schema.simpleString() == "struct<x:int,y:string>"
 
 
+def test_empty_generator_rows(spark):
+    # an empty iterator has no length to test: the empty-relation path
+    # must branch on the normalized rows, not on the iterator's truthiness
+    df = local_relation(spark, iter([]), "x int, y string")
+    assert df.count() == 0
+    assert df.schema.simpleString() == "struct<x:int,y:string>"
+
+
 def test_unsupported_type_falls_back(spark):
     # map type is not rendered — must silently fall back, same data
     rows = [({"a": 1},)]
