@@ -7,6 +7,12 @@ Subcommands mirror bdt v0.18.0 one-for-one:
 
 Errors print to stderr and exit 1 (the reference exits -1, main.rs:102-108;
 1 is the POSIX-conventional equivalent).
+
+`count` on a local parquet path starts no Spark session: bdt's count is
+`SELECT COUNT(*)` (main.rs:229-230), which DataFusion's AggregateStatistics
+rule answers from the parquet row-count statistic without a scan, and this
+CLI answers it from the same footers. `count` on other formats or on
+remote paths runs on Spark.
 """
 
 from __future__ import annotations
@@ -14,8 +20,10 @@ from __future__ import annotations
 import argparse
 import sys
 
+from bdt_spark.operators.meta import parquet_row_count
 from bdt_spark.session import get_spark
 from bdt_spark.sources.io import (
+    file_format,
     read_file,
     register_dir,
     register_table,
@@ -23,11 +31,22 @@ from bdt_spark.sources.io import (
 )
 
 
+def _local_parquet(path: str) -> bool:
+    # Hadoop's Path rule: a colon before the first slash starts a URI
+    # scheme (s3a://, hdfs://, file:), which stays on Spark's file system
+    return file_format(path) == "parquet" and ":" not in path.split("/", 1)[0]
+
+
 def cmd_view(args) -> None:
     # main.rs:30-36, 114-127: default limit 10; --limit 0 = everything
     spark = get_spark("bdt_view")
     df = read_file(spark, args.table)
-    n = args.limit if args.limit > 0 else df.count()
+    if args.limit > 0:
+        n = args.limit
+    elif _local_parquet(args.table):  # footer count, as in cmd_count
+        n = parquet_row_count(args.table)
+    else:
+        n = df.count()
     df.show(n, truncate=False)
 
 
@@ -44,7 +63,19 @@ def cmd_schema(args) -> None:
 
 
 def cmd_count(args) -> None:
-    # main.rs:55-59, 226-232
+    # main.rs:55-59, 226-232. bdt's count is SELECT COUNT(*), which
+    # DataFusion's AggregateStatistics rule answers from parquet row-count
+    # statistics without a scan; local parquet is answered the same way,
+    # before any Spark session starts. Equivalence: Spark's count() over
+    # parquet is the sum of the row-group row counts of the files its file
+    # index lists; the footer's num_rows is that same sum, over the files
+    # parquet_row_count lists by Spark's own hidden-name rule. No filter,
+    # projection or schema conversion is involved: read_file's
+    # nanos-as-long and NTZ->LTZ shims change column types, never the
+    # row count.
+    if _local_parquet(args.table):
+        print(parquet_row_count(args.table))
+        return
     spark = get_spark("bdt_count")
     df = read_file(spark, args.table)
     print(df.count())
@@ -79,7 +110,6 @@ def cmd_query(args) -> None:
     if args.output:
         # csv and parquet only, like main.rs:188-221
         from bdt_spark.operators.convert import UnsupportedOutputError
-        from bdt_spark.sources.io import file_format
 
         fmt = file_format(args.output)
         if fmt == "csv":

@@ -8,7 +8,9 @@ file-level (version, created_by, rows, row groups) then per-row-group
 per-column rows (type, nulls, min/max) — parquet.rs:20-44 and 73-127.
 
 UTF-8 min/max stats are decoded for string columns only, like
-parquet.rs:105-118 (byte columns stay as hex)."""
+parquet.rs:105-118 (byte columns stay as hex).
+
+`parquet_row_count` sums the same footers' row counts for `bdt count`."""
 
 from __future__ import annotations
 
@@ -102,6 +104,40 @@ def read_parquet_meta(path: str) -> ParquetMeta:
             )
         out.row_groups.append(g)
     return out
+
+
+def _spark_lists(name: str) -> bool:
+    """Spark's file-index rule for data paths (HadoopFSUtils
+    shouldFilterOutPathName): hidden `.` names and `_` names such as
+    `_SUCCESS` are skipped, unless they hold `=` like the partition
+    directory `_k=1`."""
+    return not (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def parquet_row_count(path: str) -> int:
+    """Row count of a local parquet file or directory, from footers only.
+
+    A directory sums `num_rows` over every leaf file Spark's file index
+    would list (partition directories included). Every footer is read, so
+    a non-parquet member raises, as it does in Spark; so does a directory
+    with no data file, where Spark cannot infer a schema."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(path):
+        return pq.read_metadata(path).num_rows
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if _spark_lists(d)]
+        files += [os.path.join(root, f) for f in names if _spark_lists(f)]
+    if not files:
+        raise FileNotFoundError(f"no parquet data files under {path!r}")
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 def format_parquet_meta(meta: ParquetMeta) -> str:

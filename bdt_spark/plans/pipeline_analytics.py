@@ -1051,8 +1051,12 @@ _BASKET_ORACLE = """
 # exactly like DISTINCT (and drops NULL categories, which the
 # self-join's `<` and the margin joins' equality drop anyway);
 # sort_array makes pos_a < pos_b ⟺ cat_a < cat_b (distinct sorted
-# values); n_orders = one array row per orderkey. Rows proven
-# identical at sf0.001/0.01/0.1/sf10.
+# values); n_orders = one array row per orderkey. NULL l_orderkey rows
+# group into one pseudo-order: the oracle's COUNT(DISTINCT l_orderkey)
+# and self-join equality count neither it nor its pairs, so the tail
+# skips it in n and pairs, while cat_n keeps it, as the oracle's
+# DISTINCT keeps (NULL, category) rows. Rows proven identical at
+# sf0.001/0.01/0.1/sf10.
 _BASKET_PER_ORDER = """
       SELECT l_orderkey,
              sort_array(collect_set(CAST(l_partkey % 50 AS BIGINT))) AS cats
@@ -1066,14 +1070,14 @@ _BASKET_TAIL = """
       GROUP BY category
     ),
     n AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n_orders FROM {src}
+      SELECT CAST(COUNT(l_orderkey) AS BIGINT) AS n_orders FROM {src}
     ),
     pairs AS (
       SELECT cat_a, cat_b, CAST(COUNT(*) AS BIGINT) AS c_ab
       FROM {src}
       LATERAL VIEW posexplode(cats) ta AS pa, cat_a
       LATERAL VIEW posexplode(cats) tb AS pb, cat_b
-      WHERE pa < pb
+      WHERE pa < pb AND l_orderkey IS NOT NULL
       GROUP BY cat_a, cat_b
       HAVING COUNT(*) >= 10
     )

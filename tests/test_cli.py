@@ -440,3 +440,145 @@ def test_cli_stream_ann(tmp_path, capsys, spark):
     ]) == 0
     assert "stream drained: index skew=" in capsys.readouterr().out
     assert spark.read.parquet(f"{idx}/increments").count() == 10
+
+
+# --- count from the parquet footer, with no Spark session ---------------
+
+
+def _nulls_multi_row_group(spark, d):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(d / "t.parquet")
+    pq.write_table(
+        pa.table({"k": pa.array([None if i % 7 == 0 else i for i in range(1000)],
+                                pa.int64())}),
+        p, row_group_size=128,
+    )
+    assert pq.ParquetFile(p).metadata.num_row_groups > 1
+    return p
+
+
+def _parq_extension(spark, d):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(d / "t.parq")
+    pq.write_table(pa.table({"k": list(range(17))}), p)
+    return p
+
+
+def _zero_rows(spark, d):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(d / "empty.parquet")
+    pq.write_table(pa.table({"k": pa.array([], pa.int64())}), p)
+    return p
+
+
+def _spark_written_dir(spark, d):
+    import os
+
+    p = str(d / "out.parquet")
+    spark.range(0, 250, 1, 3).write.parquet(p)
+    names = os.listdir(p)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    return p
+
+
+def _hive_partitioned_dir(spark, d):
+    import os
+
+    # `_p=...` directories start with `_` but are partitions Spark reads
+    p = str(d / "part.parquet")
+    spark.range(0, 90).selectExpr(
+        "id", "CASE WHEN id % 4 = 0 THEN NULL ELSE id % 3 END AS k",
+        "id % 2 AS _p",
+    ).write.partitionBy("k", "_p").parquet(p)
+    assert "k=__HIVE_DEFAULT_PARTITION__" in os.listdir(p)
+    return p
+
+
+@pytest.mark.parametrize("make", [
+    _nulls_multi_row_group, _parq_extension, _zero_rows,
+    _spark_written_dir, _hive_partitioned_dir,
+])
+def test_count_footer_equals_spark_count(make, spark, tmp_path, capsys):
+    p = make(spark, tmp_path)
+    assert main(["count", "--table", p]) == 0
+    assert int(capsys.readouterr().out.strip()) == spark.read.parquet(p).count()
+
+
+def test_count_local_parquet_starts_no_session(monkeypatch, tmp_path, capsys):
+    """Structural pin: count on local parquet never calls get_spark, and
+    every other input still does."""
+    import bdt_spark.cli as cli
+
+    def no_session(*a, **kw):
+        raise RuntimeError("get_spark called")
+
+    monkeypatch.setattr(cli, "get_spark", no_session)
+    assert main(["count", "--table", f"{SF_DIR}/region.parquet"]) == 0
+    assert capsys.readouterr().out.strip() == "5"
+    csv = tmp_path / "r.csv"
+    csv.write_text("a\n1\n2\n")
+    assert main(["count", "--table", str(csv)]) == 1
+    assert "get_spark called" in capsys.readouterr().err
+
+
+def _missing(d):
+    return str(d / "missing.parquet")
+
+
+def _corrupt(d):
+    p = d / "corrupt.parquet"
+    p.write_bytes(b"not a parquet file at all")
+    return str(p)
+
+
+def _dir_with_non_parquet_member(d):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = d / "mixed.parquet"
+    p.mkdir()
+    pq.write_table(pa.table({"k": [1, 2]}), str(p / "part-0.parquet"))
+    (p / "notes.txt").write_text("not parquet")
+    return str(p)
+
+
+def _dir_without_data_files(d):
+    p = d / "nodata.parquet"
+    p.mkdir()
+    (p / "_SUCCESS").write_text("")
+    return str(p)
+
+
+@pytest.mark.parametrize("make", [
+    _missing, _corrupt, _dir_with_non_parquet_member, _dir_without_data_files,
+])
+def test_count_footer_errors_where_spark_does(make, spark, tmp_path, capsys):
+    p = make(tmp_path)
+    assert main(["count", "--table", p]) == 1
+    assert "Error" in capsys.readouterr().err
+    with pytest.raises(Exception):
+        spark.read.parquet(p).count()
+
+
+def test_view_limit_zero_shows_every_row(spark, monkeypatch, tmp_path, capsys):
+    """--limit 0 takes n from the footer count, not a count job: all 30
+    rows, past show()'s default of 20."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def no_count(self):
+        raise RuntimeError("count job started")
+
+    monkeypatch.setattr(type(spark.range(0)), "count", no_count)
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": list(range(30))}), p, row_group_size=8)
+    assert main(["view", p, "--limit", "0"]) == 0
+    out = capsys.readouterr().out
+    assert len([ln for ln in out.splitlines()
+                if ln.startswith("|") and "k" not in ln]) == 30

@@ -451,6 +451,59 @@ def test_r16_materialize_gate_arms_agree(spark, sf_dir):
         assert gated_rows == bare_rows, f"{name}: gate arms diverge"
 
 
+def _crafted_lineitem(path) -> None:
+    """lineitem.parquet with NULL l_orderkey rows spread over 6
+    categories (one NULL-key pseudo-order), 40 keyed orders of 2-5
+    categories each, NULL partkeys and an order with only a NULL partkey."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(11)
+    rows = [(None, c) for c in (0, 1, 2, 3, 4, 5, 50, 51)]
+    for order in range(1, 41):
+        for cat in rng.sample(range(6), rng.randint(2, 5)):
+            rows.append((order, cat + 50 * rng.randint(0, 3)))
+        if order % 9 == 0:
+            rows.append((order, None))
+    rows.append((41, None))
+    keys, parts = zip(*rows)
+    pq.write_table(
+        pa.table({
+            "l_orderkey": pa.array(keys, pa.int64()),
+            "l_partkey": pa.array(parts, pa.int64()),
+        }),
+        str(path / "lineitem.parquet"),
+    )
+
+
+@pytest.mark.parametrize("gate_bytes", [None, 0], ids=["bare", "persisted"])
+def test_basket_lift_matches_oracle_on_null_orderkeys(
+    spark, tmp_path, monkeypatch, gate_bytes
+):
+    """Both basket arms share a tail that skips the NULL-l_orderkey
+    pseudo-order in n_orders and in the pairs, as the oracle's
+    COUNT(DISTINCT l_orderkey) and self-join do."""
+    from bdt_spark.operators.cacheutil import release
+    from bdt_spark.plans import pipeline_analytics
+    from bdt_spark.sources.io import load_fixture_tables
+
+    if gate_bytes is not None:
+        monkeypatch.setattr(
+            pipeline_analytics, "_BASKET_MATERIALIZE_MIN_BYTES", gate_bytes
+        )
+    _crafted_lineitem(tmp_path)
+    spec = plans.get_query("orders_market_basket_lift")
+    df = spec.fn(spark, str(tmp_path))
+    got = sorted(map(tuple, df.collect()))
+    release(df)
+    load_fixture_tables(spark, str(tmp_path))
+    want = sorted(map(tuple, spark.sql(spec.oracle).collect()))
+    assert want
+    assert got == want
+
+
 def test_registry_sf10_sweep_coverage():
     """REGISTRATION RULE enforcement (VERDICT r14 #2): every registered
     query needs BOTH an oracle row and an sf10 sweep record. The sweep
